@@ -1,7 +1,14 @@
 package graft.core
 
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.HadoopFsRelation
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+  ParquetFooterReader, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** Minimal snapshot-committed table format over plain parquet — the
   * transactional completion of the incremental cycle that
@@ -211,7 +218,7 @@ object SnapshotTable {
 
   /** A manifest entry's root-relative file path (the part before the
     * optional TAB-separated stats). */
-  private def entryPath(line: String): String = {
+  private[graft] def entryPath(line: String): String = {
     val t = line.indexOf('\t')
     if (t < 0) line else line.substring(0, t)
   }
@@ -223,6 +230,55 @@ object SnapshotTable {
     * as rows (see [[deleteWhereDV]]). */
   private def splitEntries(entries: Seq[String]): (Seq[String], Seq[String]) =
     entries.partition(e => !entryPath(e).startsWith(s"$DvDir/"))
+
+  /** The snapshot files `entries` as a DataFrame planned entirely on
+    * the driver: a [[HadoopFsRelation]] over the manifest-backed
+    * [[graft.sources.SnapshotFileIndex]] (file list and sizes from the
+    * manifest, pushed-down filters pruned against its sections) with
+    * the data schema from the first entry's footer ([[schemaOf]]). No
+    * directory listing and no schema-inference job — the one
+    * construction behind every snapshot read; the scan is Spark's
+    * native vectorized parquet reader, `_metadata` columns included. */
+  private def relation(spark: SparkSession, rootP: Path,
+                       entries: Seq[String]): DataFrame =
+    spark.baseRelationToDataFrame(HadoopFsRelation(
+      graft.sources.SnapshotFileIndex(spark, rootP, entries),
+      partitionSchema = StructType(Nil),
+      dataSchema = schemaOf(spark, rootP, entries),
+      bucketSpec = None,
+      fileFormat = new ParquetFileFormat(),
+      options = Map.empty)(spark))
+
+  /** The read schema of the snapshot files `entries`: the first entry's
+    * parquet footer converted under the session's parquet settings,
+    * every field made nullable as Spark's `DataSource` does for file
+    * sources — field for field what `spark.read.parquet` over the same
+    * files infers (without `mergeSchema` it samples the first file
+    * too; the append/upsert guards keep one schema per manifest), for
+    * one footer read on the driver instead of a Spark job. */
+  private def schemaOf(spark: SparkSession, rootP: Path,
+                       entries: Seq[String]): StructType = {
+    val head = entries.headOption.getOrElse(throw new IllegalStateException(
+      s"SnapshotTable at $rootP: manifest lists no data files"))
+    val p = new Path(rootP, entryPath(head))
+    val footer = ParquetFooterReader.readFooter(
+      HadoopInputFile.fromPath(p, spark.sessionState.newHadoopConf()),
+      ParquetMetadataConverter.SKIP_ROW_GROUPS)
+    asNullable(ParquetFileFormat.readSchemaFromFooter(new Footer(p, footer),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf)))
+  }
+
+  private def asNullable(s: StructType): StructType =
+    StructType(s.fields.map(f =>
+      f.copy(dataType = nullableType(f.dataType), nullable = true)))
+
+  private def nullableType(t: DataType): DataType = t match {
+    case s: StructType => asNullable(s)
+    case ArrayType(e, _) => ArrayType(nullableType(e), containsNull = true)
+    case MapType(k, v, _) =>
+      MapType(nullableType(k), nullableType(v), valueContainsNull = true)
+    case other => other
+  }
 
   /** Read `dataEntries` with positional identity attached —
     * `__graft_fn` (file base name; part names carry a UUID, so it is
@@ -236,16 +292,14 @@ object SnapshotTable {
                           dataEntries: Seq[String],
                           dvEntries: Seq[String]): DataFrame = {
     import org.apache.spark.sql.functions._
-    val data = spark.read.parquet(
-        dataEntries.map(e => new Path(rootP, entryPath(e)).toString): _*)
+    val data = relation(spark, rootP, dataEntries)
       .select(col("*"),
         element_at(split(col("_metadata.file_path"), "/"), -1)
           .as("__graft_fn"),
         col("_metadata.row_index").as("__graft_ri"))
     if (dvEntries.isEmpty) data
     else data.join(
-      spark.read.parquet(
-          dvEntries.map(e => new Path(rootP, entryPath(e)).toString): _*)
+      relation(spark, rootP, dvEntries)
         .select(col("file_name").as("__graft_fn"),
           col("row_index").as("__graft_ri")),
       Seq("__graft_fn", "__graft_ri"), "left_anti")
@@ -258,9 +312,7 @@ object SnapshotTable {
   private def readEntriesWithDv(spark: SparkSession, rootP: Path,
                                 dataEntries: Seq[String],
                                 dvEntries: Seq[String]): DataFrame =
-    if (dvEntries.isEmpty)
-      spark.read.parquet(
-        dataEntries.map(e => new Path(rootP, entryPath(e)).toString): _*)
+    if (dvEntries.isEmpty) relation(spark, rootP, dataEntries)
     else readWithPos(spark, rootP, dataEntries, dvEntries)
       .drop("__graft_fn", "__graft_ri")
 
@@ -371,7 +423,13 @@ object SnapshotTable {
   }
 
   /** Snapshot `v` exactly — time travel within the retained window.
-    * Loud if `v` was vacuumed or never committed. */
+    * Loud if `v` was vacuumed or never committed. Planned from the
+    * manifest plus one parquet footer, with no Spark job: the relation
+    * sits on a manifest-backed [[graft.sources.SnapshotFileIndex]], so
+    * filters Spark pushes down skip the files whose recorded
+    * range/category/Bloom sections cannot match (see [[table]]). Live
+    * deletion vectors add a broadcast anti-join against the tombstones
+    * (the MOR read price; [[compactSnapshot]] folds them away). */
   def readVersion(spark: SparkSession, root: String, v: Long): DataFrame = {
     val (fs, rootP) = fsOf(spark, root)
     if (!fs.exists(manifestPath(rootP, v)))
@@ -390,40 +448,14 @@ object SnapshotTable {
   }
 
   /** The current snapshot as a DataFrame whose SCAN prunes files
-    * TRANSPARENTLY: the relation is built over a manifest-backed
-    * [[graft.sources.SnapshotFileIndex]], so any filter Spark pushes
-    * down reaches the index and skips the files whose recorded
-    * range/category/Bloom sections cannot match — `table(...).filter
-    * (col("k") === 42)` plans the same file set as an explicit
-    * [[scanPrunedBloom]] probe, with no special API on the read path
-    * (the Delta/Iceberg data-skipping integration on the house
-    * format). The scan itself is Spark's native vectorized parquet
-    * reader; file list and sizes come from the manifest, so planning
-    * performs no per-file filesystem calls. Falls back to the plain
-    * [[read]] when the snapshot carries LIVE deletion vectors (the
-    * MOR anti-join wraps the whole scan and Spark does not push
-    * filters through the join's probe side; compact first, or accept
-    * unpruned scans until then — documented MOR read price). */
-  def table(spark: SparkSession, root: String): DataFrame = {
-    val (fs, rootP) = fsOf(spark, root)
-    val v = currentVersion(fs, rootP).getOrElse(throw new IllegalStateException(
-      s"SnapshotTable at $root has no committed snapshot"))
-    val (dataE, dvE) = splitEntries(readManifest(fs, rootP, v))
-    if (dvE.nonEmpty) return readVersion(spark, root, v)
-    val index = graft.sources.SnapshotFileIndex(spark, rootP, dataE)
-    val schema = spark.read.parquet(
-      new Path(rootP, entryPath(dataE.head)).toString).schema
-    val relation = org.apache.spark.sql.execution.datasources
-      .HadoopFsRelation(
-        index,
-        partitionSchema = org.apache.spark.sql.types.StructType(Nil),
-        dataSchema = schema,
-        bucketSpec = None,
-        fileFormat = new org.apache.spark.sql.execution.datasources
-          .parquet.ParquetFileFormat(),
-        options = Map.empty)(spark)
-    spark.baseRelationToDataFrame(relation)
-  }
+    * TRANSPARENTLY: `table(...).filter(col("k") === 42)` plans the
+    * same file set as an explicit [[scanPrunedBloom]] probe, with no
+    * special API on the read path (the Delta/Iceberg data-skipping
+    * integration on the house format). Building it reads the manifest
+    * and one parquet footer on the driver and starts no Spark job;
+    * the filtered query then runs as one job over the kept files. The
+    * same pinned read as [[read]], deletion vectors included. */
+  def table(spark: SparkSession, root: String): DataFrame = read(spark, root)
 
   /** Write `df`'s parquet files under a fresh unreferenced data
     * directory and return their manifest entries (root-relative path,
@@ -482,7 +514,7 @@ object SnapshotTable {
           "[A-Za-z0-9_]+ — rename or alias before recording stats"))
       import org.apache.spark.sql.functions._
       val bloomCap = bloomBits / 8
-      val written = spark.read.parquet(dataHome.toString)
+      val written = relation(spark, rootP, rels.map(sized(_, Nil)))
       // job 1: per-file long min/max — constant-size aggregation
       // state. try_cast, not cast: under ANSI (Spark's default) a
       // malformed value in a statsCol would otherwise FAIL the whole
@@ -835,7 +867,8 @@ object SnapshotTable {
           s"(${changeKeys.mkString(",")}) — keyed tables require " +
           "non-null keys")
     def checkSchema(bv: Long): Unit = {
-      val have = schemaSig(readVersion(spark, root, bv).schema)
+      val have = schemaSig(
+        schemaOf(spark, rootP, splitEntries(readManifest(fs, rootP, bv))._1))
       val got = schemaSig(df.schema)
       require(have == got,
         s"SnapshotTable.append: schema mismatch — snapshot v$bv has " +
@@ -877,8 +910,7 @@ object SnapshotTable {
       // the feed step is the appended rows as inserts, read back from
       // the just-written files — O(batch) with no lineage re-pay, and
       // exact by the disjointness guard above
-      val written = spark.read.parquet(
-        newEntries.map(e => new Path(rootP, entryPath(e)).toString): _*)
+      val written = relation(spark, rootP, newEntries)
       val nonKeys = written.columns.filterNot(changeKeys.contains).toSeq
       recordChangesStep(spark, root,
         v.get - 1, v.get,
@@ -934,9 +966,8 @@ object SnapshotTable {
     val (dataE, dvE) = splitEntries(readManifest(fs, rootP, v))
     val kept = prunedEntries(dataE, colName, lo, hi)
     if (kept.isEmpty)
-      // all files pruned: an empty result with the right schema —
-      // read one file's schema via the full version, filtered to false
-      return readVersion(spark, root, v).limit(0)
+      // all files pruned: an empty result with the snapshot's schema
+      return relation(spark, rootP, dataE).limit(0)
     readEntriesWithDv(spark, rootP, kept, dvE)
   }
 
@@ -979,7 +1010,7 @@ object SnapshotTable {
       s"SnapshotTable at $root has no committed snapshot"))
     val (dataE, dvE) = splitEntries(readManifest(fs, rootP, v))
     val kept = prunedEntriesEq(dataE, colName, value)
-    if (kept.isEmpty) return readVersion(spark, root, v).limit(0)
+    if (kept.isEmpty) return relation(spark, rootP, dataE).limit(0)
     readEntriesWithDv(spark, rootP, kept, dvE)
   }
 
@@ -1025,7 +1056,7 @@ object SnapshotTable {
       s"SnapshotTable at $root has no committed snapshot"))
     val (dataE, dvE) = splitEntries(readManifest(fs, rootP, v))
     val kept = prunedEntriesBloom(dataE, colName, value)
-    if (kept.isEmpty) return readVersion(spark, root, v).limit(0)
+    if (kept.isEmpty) return relation(spark, rootP, dataE).limit(0)
     readEntriesWithDv(spark, rootP, kept, dvE)
   }
 
@@ -1222,18 +1253,18 @@ object SnapshotTable {
             keys.map(col) ++ Seq(lit("insert").as("change")) ++
               nonKeys.map(col): _*))))
         case Some(bv) =>
-          val have = schemaSig(readVersion(spark, root, bv).schema)
+          val (entries, dvE) = splitEntries(readManifest(fs, rootP, bv))
+          val have = schemaSig(schemaOf(spark, rootP, entries))
           val got = schemaSig(resolved.schema)
           require(have == got,
             s"upsertTargeted: schema mismatch — snapshot v$bv has " +
               s"(${have.mkString(",")}) but the batch has " +
               s"(${got.mkString(",")}); evolve with evolveAddColumns " +
               "or a full commit first")
-          val (entries, dvE) = splitEntries(readManifest(fs, rootP, bv))
           val (touched, untouched) =
             detectTouched(spark, rootP, entries, dvE, keys, batchKeys)
           val touchedRows =
-            if (touched.isEmpty) readVersion(spark, root, bv).limit(0)
+            if (touched.isEmpty) relation(spark, rootP, entries).limit(0)
             else readEntriesWithDv(spark, rootP, touched, dvE)
           // targeted merge: batch keys leave the touched files (the
           // batch's row wins), everything else in them survives; the
@@ -1516,9 +1547,9 @@ object SnapshotTable {
         val bv = base.getOrElse(throw new IllegalStateException(
           s"SnapshotTable at $root has no committed snapshot to update"))
         val (dataE, dvE) = splitEntries(readManifest(fs, rootP, bv))
+        val have = schemaOf(spark, rootP, dataE).fieldNames
         sets.foreach { case (n, _) =>
-          require(
-            readVersion(spark, root, bv).columns.contains(n),
+          require(have.contains(n),
             s"updateWhere: column '$n' does not exist — updates never " +
               "change the schema; evolveAddColumns first") }
         val hit = readWithPos(spark, rootP, dataE, dvE)
@@ -1760,7 +1791,7 @@ object SnapshotTable {
             val (touched, untouched) =
               detectTouched(spark, rootP, entries, dvE, keys, batchKeys)
             val touchedRows =
-              if (touched.isEmpty) readVersion(spark, root, bv).limit(0)
+              if (touched.isEmpty) relation(spark, rootP, entries).limit(0)
               else readEntriesWithDv(spark, rootP, touched, dvE)
             // drop EVERY batch key from the touched files (deletes
             // never return, upserts come back re-derived), keep the
@@ -1859,8 +1890,7 @@ object SnapshotTable {
         if (dvE.isEmpty) Set.empty
         else {
           val present = dataE.map(e => new Path(entryPath(e)).getName).toSet
-          spark.read.parquet(
-              dvE.map(e => new Path(rootP, entryPath(e)).toString): _*)
+          relation(spark, rootP, dvE)
             .select("file_name").distinct().collect()
             .map(_.getString(0)).toSet.intersect(present)
         }
@@ -1923,7 +1953,9 @@ object SnapshotTable {
     * Translated shapes: `=`/`<=>` (range ∩ category ∩ bloom — the
     * category/bloom probe uses the literal's `cast("string")` form,
     * matching what the writer hashed), `<`,`<=`,`>`,`>=` on integral
-    * literals (recorded long ranges), `IN` (any value may match),
+    * columns against integral literals (recorded long ranges; a string
+    * column's range keeps its files, since Spark compares strings
+    * lexicographically, not by the recorded numeric range), `IN` (any value may match),
     * `AND` (both sides must keep), `OR` (either side keeps). `NOT`
     * and everything else keep unconditionally. */
   private[graft] def entryMayMatch(entry: String,
@@ -1986,6 +2018,10 @@ object SnapshotTable {
             hi.forall(h => mn.forall(_ <= h))
         case None => true
       }
+    def integral(a: AttributeReference): Boolean = a.dataType match {
+      case ByteType | ShortType | IntegerType | LongType => true
+      case _ => false
+    }
     filter match {
       case And(l, r) => entryMayMatch(entry, l) && entryMayMatch(entry, r)
       case Or(l, r) => entryMayMatch(entry, l) || entryMayMatch(entry, r)
@@ -1993,22 +2029,29 @@ object SnapshotTable {
       case EqualTo(l: Literal, a: AttributeReference) => eqKeep(a.name, l)
       case EqualNullSafe(a: AttributeReference, l: Literal) => eqKeep(a.name, l)
       case EqualNullSafe(l: Literal, a: AttributeReference) => eqKeep(a.name, l)
-      case GreaterThan(a: AttributeReference, l: Literal) =>
+      // open ranges only on integral columns: the recorded sections
+      // are numeric (`try_cast` to BIGINT), and Spark orders strings
+      // lexicographically ('10' < '9'), so a string range keeps its file
+      case GreaterThan(a: AttributeReference, l: Literal) if integral(a) =>
         asLong(l).forall(v => rangeKeep(a.name, Some(v + 1), None))
-      case GreaterThanOrEqual(a: AttributeReference, l: Literal) =>
+      case GreaterThanOrEqual(a: AttributeReference, l: Literal)
+          if integral(a) =>
         asLong(l).forall(v => rangeKeep(a.name, Some(v), None))
-      case LessThan(a: AttributeReference, l: Literal) =>
+      case LessThan(a: AttributeReference, l: Literal) if integral(a) =>
         asLong(l).forall(v => rangeKeep(a.name, None, Some(v - 1)))
-      case LessThanOrEqual(a: AttributeReference, l: Literal) =>
+      case LessThanOrEqual(a: AttributeReference, l: Literal)
+          if integral(a) =>
         asLong(l).forall(v => rangeKeep(a.name, None, Some(v)))
       // literal-on-the-left comparisons, mirrored
-      case GreaterThan(l: Literal, a: AttributeReference) =>
+      case GreaterThan(l: Literal, a: AttributeReference) if integral(a) =>
         asLong(l).forall(v => rangeKeep(a.name, None, Some(v - 1)))
-      case GreaterThanOrEqual(l: Literal, a: AttributeReference) =>
+      case GreaterThanOrEqual(l: Literal, a: AttributeReference)
+          if integral(a) =>
         asLong(l).forall(v => rangeKeep(a.name, None, Some(v)))
-      case LessThan(l: Literal, a: AttributeReference) =>
+      case LessThan(l: Literal, a: AttributeReference) if integral(a) =>
         asLong(l).forall(v => rangeKeep(a.name, Some(v + 1), None))
-      case LessThanOrEqual(l: Literal, a: AttributeReference) =>
+      case LessThanOrEqual(l: Literal, a: AttributeReference)
+          if integral(a) =>
         asLong(l).forall(v => rangeKeep(a.name, Some(v), None))
       case In(a: AttributeReference, vs) if vs.forall(_.isInstanceOf[Literal]) =>
         vs.isEmpty || vs.exists(v => eqKeep(a.name, v.asInstanceOf[Literal]))

@@ -33,10 +33,6 @@ object Quantize {
       scale.as("scale"))
   }
 
-  /** Reconstruct the (lossy) float vector: q · scale. */
-  def dequantize(q: Column, scale: Column): Column =
-    transform(q, x => x * scale)
-
   /** Max absolute reconstruction error of a quantized vector — the
     * quality gauge; ≤ scale/2 by construction. */
   def maxError(emb: Column, q: Column, scale: Column): Column =

@@ -34,19 +34,6 @@ object TextAnalysis {
     graft.plans.SketchExpressions.hashed_counts(grams, dim)
   }
 
-  /** Frozen linear model over a feature vector: Σ wᵢ·featuresᵢ as an
-    * EXPLICIT left-associated expression chain (16 literal-weight terms
-    * compile to straight-line codegen — no HOF, no loop) so the double
-    * arithmetic is bit-reproducible in any engine that evaluates the
-    * same formula text. This is the scoring half of a fastText-style
-    * quality classifier: train offline, freeze the weights, gate the
-    * corpus map-side. */
-  def linearScore(features: Column, weights: Seq[Double]): Column =
-    weights.zipWithIndex
-      .map { case (w, i) =>
-        lit(w) * element_at(features, i + 1).cast("double") }
-      .reduceLeft(_ + _)
-
   /** Exact fixed-point linear score for weights that are exact decimal
     * multiples of 1/scale (e.g. tenths with scale=10): the dot product
     * Σ (scale·wᵢ)·cᵢ is computed entirely in int64 over integer feature

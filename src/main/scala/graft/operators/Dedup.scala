@@ -51,15 +51,6 @@ object Dedup {
     df.select(col(idCol).as("id"), shingles(col(textCol), n).as("sh"))
       .filter(size(col("sh")) > 0)
 
-  /** (id, shingle) exploded table + per-doc shingle-set sizes. */
-  def shingleTables(df: DataFrame, idCol: String, textCol: String, n: Int = 3)
-      : (DataFrame, DataFrame) = {
-    val withSh = shingleSets(df, idCol, textCol, n)
-    val exploded = withSh.select(col("id"), explode(col("sh")).as("s"))
-    val sizes = withSh.select(col("id"), size(col("sh")).as("n_sh"))
-    (exploded, sizes)
-  }
-
   /** Exact Jaccard verification of given candidate pairs against the
     * per-doc shingle sets: one fused merge-walk per pair
     * ([[graft.plans.VectorExpressions.SetExpressions.SortedArrayJaccard]])

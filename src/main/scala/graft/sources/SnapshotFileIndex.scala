@@ -26,19 +26,33 @@ import graft.core.SnapshotTable
   *
   * The file list and sizes come from the MANIFEST (entries pin the
   * snapshot; `!bytes` sections carry lengths), so constructing and
-  * scanning this index performs no per-file filesystem calls at all —
-  * at 400k files that is the difference between a plan and a
+  * scanning this index performs no per-file filesystem calls — at
+  * 400k files that is the difference between a plan and a
   * 400k-HEAD-call listing. Entries from pre-size manifests fall back
-  * to one `getFileStatus` each, once, at construction.
+  * to one `getFileStatus` each, once, at construction. Every snapshot
+  * read is a relation over this index whose schema comes from one
+  * footer read on the driver, so a read is planned from the manifest
+  * plus one footer, with no Spark job.
   *
   * Strictly a SUPERSET index: untranslatable filters and section-less
   * columns keep their files ([[SnapshotTable.entryMayMatch]]), and
   * Spark re-applies every filter row-level — pruning can only skip
   * files that cannot match, never change a result. */
-final class SnapshotFileIndex(spark: SparkSession, rootP: Path,
-                              entries: Seq[String],
+final class SnapshotFileIndex(spark: SparkSession, private val rootP: Path,
+                              private val entries: Seq[String],
                               statuses: Map[String, FileStatus])
     extends FileIndex {
+
+  // equal over the pinned snapshot (root + manifest entries), as
+  // InMemoryFileIndex is over its root paths: two reads of one
+  // snapshot then canonicalize to the same plan, so CacheManager and
+  // exchange/subquery reuse match them
+  override def equals(other: Any): Boolean = other match {
+    case o: SnapshotFileIndex => o.rootP == rootP && o.entries == entries
+    case _ => false
+  }
+
+  override def hashCode: Int = (rootP, entries).hashCode
 
   override def rootPaths: Seq[Path] = Seq(rootP)
 
@@ -50,11 +64,11 @@ final class SnapshotFileIndex(spark: SparkSession, rootP: Path,
     val kept = dataFilters.foldLeft(entries)((es, f) =>
       es.filter(e => SnapshotTable.entryMayMatch(e, f)))
     Seq(PartitionDirectory(InternalRow.empty,
-      kept.map(e => statuses(SnapshotFileIndex.entryPathOf(e))).toArray))
+      kept.map(e => statuses(SnapshotTable.entryPath(e))).toArray))
   }
 
   override def inputFiles: Array[String] =
-    entries.map(e => statuses(SnapshotFileIndex.entryPathOf(e))
+    entries.map(e => statuses(SnapshotTable.entryPath(e))
       .getPath.toString).toArray
 
   override def refresh(): Unit = ()
@@ -64,11 +78,6 @@ final class SnapshotFileIndex(spark: SparkSession, rootP: Path,
 
 object SnapshotFileIndex {
 
-  private[sources] def entryPathOf(line: String): String = {
-    val t = line.indexOf('\t')
-    if (t < 0) line else line.substring(0, t)
-  }
-
   /** Build the index for `entries` of the snapshot at `rootP` —
     * statuses synthesized from the manifest's recorded sizes (one
     * `getFileStatus` fallback per pre-size entry, nothing else touches
@@ -77,7 +86,7 @@ object SnapshotFileIndex {
       : SnapshotFileIndex = {
     val fs = rootP.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val statuses = entries.map { e =>
-      val rel = entryPathOf(e)
+      val rel = SnapshotTable.entryPath(e)
       val p = fs.makeQualified(new Path(rootP, rel))
       val len = SnapshotTable.entryBytes(e)
         .getOrElse(fs.getFileStatus(p).getLen)

@@ -1,8 +1,13 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.spark.SpecBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions._
 
 import graft.core.SnapshotTable
@@ -103,5 +108,141 @@ class SnapshotFileIndexSpec extends SparkSpec {
     assert(t2.count() == 99L)
     assert(scannedFiles(t2.filter(col("k") === 50L)) <
       scannedFiles(t2))
+  }
+
+  test("snapshot reads carry spark.read.parquet's schema field for " +
+      "field (non-nullable, nested struct/array, across commits) and " +
+      "its rows, deletion vectors included") {
+    val root = freshRoot()
+    def rows(lo: Long, hi: Long) = spark.range(lo, hi).selectExpr(
+        "id as k", "concat('v', id) as v",
+        "named_struct('a', id, 'b', array(id, id + 1)) as s",
+        "array(named_struct('x', cast(id as int))) as xs")
+      .repartitionByRange(2, col("k"))
+    val first = rows(0L, 60L)
+    assert(!first.schema("k").nullable && !first.schema("s").nullable,
+      "the fixture must carry non-nullable fields")
+    val v1 = SnapshotTable.commit(spark, root, first, statsCols = Seq("k"))
+    val v2 = SnapshotTable.append(spark, root, rows(60L, 100L),
+      statsCols = Seq("k"))
+
+    def sorted(df: org.apache.spark.sql.DataFrame): Seq[Row] =
+      df.collect().toSeq.sortBy(_.getLong(0))
+    def checkParity(df: org.apache.spark.sql.DataFrame, what: String)
+        : Unit = {
+      val want = spark.read.parquet(df.inputFiles.toSeq: _*)
+      assert(df.schema.fields.toSeq == want.schema.fields.toSeq,
+        s"$what schema ${df.schema.treeString} != " +
+          want.schema.treeString)
+      assert(sorted(df) == sorted(want), s"$what rows diverged")
+    }
+    checkParity(SnapshotTable.table(spark, root), "table")
+    checkParity(SnapshotTable.read(spark, root), "read")
+    checkParity(SnapshotTable.readVersion(spark, root, v1), s"v$v1")
+    checkParity(SnapshotTable.readVersion(spark, root, v2), s"v$v2")
+    assert(SnapshotTable.readVersion(spark, root, v1).count() == 60L)
+    assert(SnapshotTable.table(spark, root).count() == 100L)
+
+    // the DV read resolves `_metadata.file_path`/`row_index` on the
+    // manifest relation: exactly the deleted rows disappear
+    val before = sorted(SnapshotTable.read(spark, root))
+    val (_, n, _) = SnapshotTable.deleteWhereDV(spark, root,
+      col("k") % 7 === 3L)
+    assert(n == before.count(_.getLong(0) % 7 == 3L))
+    assert(SnapshotTable.dvFileCount(spark, root) > 0)
+    val want = before.filterNot(_.getLong(0) % 7 == 3L)
+    assert(sorted(SnapshotTable.read(spark, root)) == want)
+    assert(sorted(SnapshotTable.table(spark, root)) == want)
+    assert(SnapshotTable.read(spark, root).schema ==
+      SnapshotTable.readVersion(spark, root, v2).schema)
+  }
+
+  test("string range filters keep their files: a numeric section is " +
+      "no bound on lexicographic order, for reads and deleteWhere") {
+    val root = freshRoot()
+    def part(vs: String*) = spark.createDataFrame(
+        vs.map(v => (v, v.length.toLong))).toDF("s", "n").coalesce(1)
+    // numeric sections [10,10], [95,99] and [1,1] — yet '10' < '9' and
+    // '1' < '9', 'a' > '5' under Spark's string order
+    SnapshotTable.commit(spark, root, part("10"), statsCols = Seq("s"))
+    SnapshotTable.append(spark, root, part("95", "99"), statsCols = Seq("s"))
+    SnapshotTable.append(spark, root, part("1", "a"), statsCols = Seq("s"))
+    val files = SnapshotTable.read(spark, root).inputFiles.toSeq
+    assert(files.size == 3)
+    def strings(df: org.apache.spark.sql.DataFrame): Set[String] =
+      df.collect().map(_.getString(0)).toSet
+    Seq(col("s") < "9", col("s") <= "10", col("s") > "5",
+        col("s") >= "a", lit("9") > col("s")).foreach { cond =>
+      val want = strings(spark.read.parquet(files: _*).filter(cond))
+      assert(strings(SnapshotTable.read(spark, root).filter(cond)) == want,
+        s"read diverged for $cond")
+      assert(strings(SnapshotTable.table(spark, root).filter(cond)) == want,
+        s"table diverged for $cond")
+    }
+    SnapshotTable.deleteWhere(spark, root, col("s") < "9")
+    assert(strings(SnapshotTable.read(spark, root)) == Set("95", "99", "a"))
+  }
+
+  test("two reads of one snapshot are one plan: a cached read serves " +
+      "the next read, and a new commit's read is not served from it") {
+    val root = freshRoot()
+    SnapshotTable.commit(spark, root,
+      spark.range(0L, 50L).selectExpr("id as k"), statsCols = Seq("k"))
+    def fromCache(df: org.apache.spark.sql.DataFrame): Boolean =
+      df.queryExecution.withCachedData.collect {
+        case r: InMemoryRelation => r }.nonEmpty
+    val cached = SnapshotTable.read(spark, root).cache()
+    try {
+      assert(cached.count() == 50L)
+      assert(fromCache(SnapshotTable.read(spark, root)))
+      assert(fromCache(SnapshotTable.table(spark, root)))
+      SnapshotTable.append(spark, root,
+        spark.range(50L, 60L).selectExpr("id as k"), statsCols = Seq("k"))
+      val next = SnapshotTable.read(spark, root)
+      assert(!fromCache(next))
+      assert(next.count() == 60L)
+    } finally cached.unpersist(blocking = true)
+  }
+
+  test("building a snapshot read starts no Spark job: table and " +
+      "readVersion(...).schema start 0 jobs, a filtered point lookup " +
+      "exactly 1, every time") {
+    val root = freshRoot()
+    val v = SnapshotTable.commit(spark, root,
+      spark.range(0L, 400L).selectExpr("id as k", "md5(concat('v', id)) as v")
+        .repartitionByRange(4, col("k")),
+      statsCols = Seq("k"), bloomCols = Seq("k"))
+    val sc = spark.sparkContext
+    val group = s"snapidx-jobs-${java.util.UUID.randomUUID()}"
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(
+            _.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    def jobsOf(body: => Unit): Int = {
+      sc.setJobGroup(group, "snapshot read job count")
+      try {
+        SpecBus.drain(sc)
+        jobs.set(0)
+        body
+        SpecBus.drain(sc)
+        jobs.get
+      } finally sc.clearJobGroup()
+    }
+    sc.addSparkListener(listener)
+    try {
+      (1 to 3).foreach { _ =>
+        assert(jobsOf(SnapshotTable.table(spark, root)) == 0)
+        assert(jobsOf(SnapshotTable.readVersion(spark, root, v).schema) == 0)
+        var got: Array[Row] = null
+        assert(jobsOf {
+          got = SnapshotTable.table(spark, root)
+            .filter(col("k") === 37L).collect()
+        } == 1)
+        assert(got.map(_.getLong(0)).toSeq == Seq(37L))
+      }
+    } finally sc.removeSparkListener(listener)
   }
 }

@@ -25,9 +25,7 @@ done
 echo "loadavg: $(cut -d' ' -f1-3 /proc/loadavg)"
 
 echo "== full-suite bench @ sf0.1 =="
-SPARK_DRIVER_MEM=${SPARK_DRIVER_MEM:-32g} \
   SPARK_GRAFT_SF_DIR=${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.1} \
-  SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-32} \
   sbt -batch "runMain graft.Bench" 2>&1 | grep '"metric"' | sed 's/^\[info\] //'
 
 cp BENCH_DETAIL.json "BENCH_DETAIL_${tag}.json"

@@ -33,16 +33,13 @@ fi
 echo "ok: ${n_t} tests (README matches)"
 
 echo "== oracle @ sf0.01 (the driver's gate) =="
-SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-16} \
   sbt -batch "runMain graft.Verify /root/testdata/sf0.01 /tmp/verify_sf001" >/dev/null 2>&1 || true
 python3 tools/oracle_check.py /root/testdata/sf0.01 /tmp/verify_sf001 | tail -1
 
 echo "== oracle @ sf0.1 (scale-dependent float-boundary sweep) =="
-SPARK_DRIVER_MEM=${SPARK_DRIVER_MEM:-32g} SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-32} \
   sbt -batch "runMain graft.Verify /root/testdata/sf0.1 /tmp/verify_sf01" >/dev/null 2>&1 || true
 python3 tools/oracle_check.py /root/testdata/sf0.1 /tmp/verify_sf01 | tail -1
 
 echo "== bench @ sf0.1 =="
-SPARK_DRIVER_MEM=${SPARK_DRIVER_MEM:-32g} SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 \
-  SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-32} \
+SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 \
   sbt -batch "runMain graft.Bench" 2>&1 | grep '"metric"' | sed 's/^\[info\] //'
